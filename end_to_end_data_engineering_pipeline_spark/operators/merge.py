@@ -100,8 +100,13 @@ def merge_upsert(
     column to the pipeline doesn't force a table rebuild; without it,
     schema drift raises (the safe default — silent drift at 100 TB is
     how a corrupted gold layer happens).
+
+    ``updates`` is cached for the merge unless the caller already
+    persisted it; a caller's cache is left for the caller to release.
     """
-    updates = updates.cache()
+    owned = not updates.is_cached
+    if owned:
+        updates = updates.cache()
     try:
         if os.path.isdir(target_path):
             target = spark.read.parquet(target_path)
@@ -125,7 +130,8 @@ def merge_upsert(
             os.rename(tmp, target_path)
         return n
     finally:
-        updates.unpersist()
+        if owned:
+            updates.unpersist()
 
 
 def latest_wins(log: DataFrame, key: str, order_col: str) -> DataFrame:

@@ -9,7 +9,10 @@ materialization points (bronze/silver/gold Parquet) — SURVEY §3/§4.1.
 The transform stage is ONE lazy plan (scan bronze -> filter batch ->
 flatten -> project/cast -> na.drop -> keep-first dedup -> sort), where
 the reference round-trips per-city Polars frames and a mid-pipeline
-Parquet handoff (clean_data.py:130,156,171).
+Parquet handoff (clean_data.py:130,156,171). ``run_pipeline`` persists
+that plan's result once per batch: the quality gate's two jobs and the
+upsert read the cached batch instead of each re-running the scan,
+flatten and dedup.
 """
 
 from __future__ import annotations
@@ -111,12 +114,13 @@ def run_pipeline(
     batch_id = ingest_batch(
         spark, locations, start, end, fetcher, wh.bronze, wh.batch_log
     )
-    silver_batch = transform(spark, wh, batch_id)
-
-    # quality gate BEFORE load (DAG order: transform >> quality >> load)
-    audit = silver_expectations().gate(silver_batch, batch_id)
-
-    n_silver = merge_upsert(spark, wh.silver, silver_batch, SILVER_KEY)
+    silver_batch = transform(spark, wh, batch_id).persist()
+    try:
+        # quality gate BEFORE load (DAG order: transform >> quality >> load)
+        audit = silver_expectations().gate(silver_batch, batch_id)
+        n_silver = merge_upsert(spark, wh.silver, silver_batch, SILVER_KEY)
+    finally:
+        silver_batch.unpersist()
 
     # gold rebuild (dbt run): full refresh per reference materialization
     silver = spark.read.parquet(wh.silver)

@@ -24,7 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import QUALITY_RESULTS, require_columns
+from ..schemas import QUALITY_RESULTS, local_frame, require_columns
 
 
 class QualityGateError(RuntimeError):
@@ -157,7 +157,7 @@ def audit_to_df(spark, audit: dict) -> DataFrame:
             {k: v for k, v in audit["violations"].items() if k.startswith("range:")}
         ),
     }
-    return spark.createDataFrame([row], schema=QUALITY_RESULTS)
+    return local_frame(spark, [row], QUALITY_RESULTS)
 
 
 @dataclass

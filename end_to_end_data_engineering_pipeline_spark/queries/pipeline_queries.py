@@ -231,10 +231,12 @@ def p5_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle) — dbt's incremental-vs-full-refresh equivalence contract
     (dbt_project.yml:19-21 vs clean_data.py:222-243). At 100 TB the
     second run reads and rewrites only the watermarked partitions."""
+    import shutil
     import tempfile
 
     from ..functions import dec2, dsum_expr
     from ..plans import ModelRunner
+    from ..schemas import local_frame
 
     o = load(spark, sf_dir, "orders")
 
@@ -248,7 +250,8 @@ def p5_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    runner = ModelRunner(warehouse_dir=tempfile.mkdtemp(prefix="p5_incr_"))
+    tmp = tempfile.mkdtemp(prefix="p5_incr_")
+    runner = ModelRunner(warehouse_dir=tmp)
     phase = {"n": 1}
 
     @runner.model(
@@ -263,11 +266,17 @@ def p5_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         # incremental: recompute complete months from the watermark on
         return monthly(o.where(F.col("o_orderdate") >= F.lit("1997-01-01")))
 
-    with fixture_phase():  # backfill; operator = incremental run
-        runner.run(spark)
-    phase["n"] = 2
-    out = runner.run(spark)
-    return out["gold_monthly_revenue"].select("month", "n_orders", "sum_price")
+    try:
+        with fixture_phase():  # backfill; operator = incremental run
+            runner.run(spark)
+        phase["n"] = 2
+        out = runner.run(spark)
+        # one row per month: materialize on the driver so the warehouse
+        # can go before the caller collects
+        gold = out["gold_monthly_revenue"].select("month", "n_orders", "sum_price")
+        return local_frame(spark, [r.asDict() for r in gold.collect()], gold.schema)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(

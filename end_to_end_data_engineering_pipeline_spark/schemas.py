@@ -3,10 +3,16 @@
 Schema system is fixed + declared, validated at runtime — mirrors the
 reference DDL (sql/raw_schema.sql, sql/staging_schema.sql) and the
 payload shape imposed at flatten time (transformation/clean_data.py:59-89).
+``local_frame`` turns a handful of driver-side rows into a DataFrame of
+one of these schemas.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from typing import Any
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -79,6 +85,15 @@ PAYLOAD = T.StructType(
     ]
 )
 
+# Location list of the partition-parallel ingest (sources/rest.py)
+LOCATIONS = T.StructType(
+    [
+        T.StructField("city", T.StringType(), True),
+        T.StructField("latitude", T.DoubleType(), True),
+        T.StructField("longitude", T.DoubleType(), True),
+    ]
+)
+
 # ---------------------------------------------------------------------------
 # Silver: staging.weather_hourly (reference sql/staging_schema.sql:7-20,
 # PK (city, ts_utc) at :19 — enforced by keep-first dedup, SURVEY §1.3)
@@ -123,3 +138,22 @@ def require_columns(df, cols) -> None:
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"missing required columns: {missing}; have {df.columns}")
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[dict[str, Any]], schema: T.StructType
+) -> DataFrame:
+    """A handful of driver-side rows (dicts keyed by field name) as a
+    DataFrame of ``schema``, read by the JVM as one Arrow batch.
+
+    ``spark.createDataFrame(rows, schema)`` pickles a Python list into a
+    ``defaultParallelism``-slice RDD, so a one-row append runs one
+    Python-worker task per core; an Arrow table becomes one partition
+    with no Python worker. Naive datetimes are read as UTC, the session
+    time zone ``get_spark`` pins. None in a non-nullable field raises
+    ValueError, as on the list path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -8,10 +8,13 @@ batch metadata open/close (:146-163, :242-263).
 Engine design: the fetcher is INJECTED (``fetcher`` callable) so tests
 and offline runs use a deterministic synthetic payload generator while
 production wires an HTTP client with the same retry policy. Fetch
-results land in a DataFrame via ``spark.createDataFrame`` with the
-explicit bronze schema; "batch close" is an append of a final-status
-row resolved by the latest-wins view (operators/merge.py) — no
-in-place UPDATE (SURVEY §4.3.2).
+results and batch-log rows become DataFrames through
+``schemas.local_frame``: one Arrow batch read by the JVM, so each
+append is a one-task job with no Python worker, where
+``spark.createDataFrame`` over a Python list would run one pickled
+task per core. "Batch close" is an append of a final-status row
+resolved by the latest-wins view (operators/merge.py) — no in-place
+UPDATE (SURVEY §4.3.2).
 
 Scale path: for thousands of locations, the location list becomes a
 DataFrame and the fetch runs partition-parallel inside ``mapInPandas``
@@ -31,7 +34,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import BATCH_LOG, BRONZE_RESPONSES
+from ..schemas import BATCH_LOG, BRONZE_RESPONSES, LOCATIONS, local_frame
 
 SOURCE_NAME = "open-meteo-archive"
 
@@ -166,7 +169,7 @@ def ingest_batch(
             "total_payload_bytes": nbytes,
         }
 
-    spark.createDataFrame([log_row("RUNNING", 0, 0, 0)], BATCH_LOG).write.mode(
+    local_frame(spark, [log_row("RUNNING", 0, 0, 0)], BATCH_LOG).write.mode(
         "append"
     ).parquet(batch_log_path)
 
@@ -199,7 +202,7 @@ def ingest_batch(
     # reference's raw.batch_id index (sql/raw_schema.sql:40-41) — the
     # per-batch transform scan reads one partition, not the table
     _require_hive_layout(bronze_path)
-    spark.createDataFrame(rows, BRONZE_RESPONSES).write.mode("append").partitionBy(
+    local_frame(spark, rows, BRONZE_RESPONSES).write.mode("append").partitionBy(
         "batch_id"
     ).parquet(bronze_path)
 
@@ -207,9 +210,7 @@ def ingest_batch(
     final = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     row = log_row(status, ok, fail, nbytes)
     row["event_time"] = final if final > now else now + dt.timedelta(seconds=1)
-    spark.createDataFrame([row], BATCH_LOG).write.mode("append").parquet(
-        batch_log_path
-    )
+    local_frame(spark, [row], BATCH_LOG).write.mode("append").parquet(batch_log_path)
     if ok == 0:
         raise RuntimeError(f"batch {batch_id}: zero successful responses")
     return batch_id
@@ -277,7 +278,8 @@ def ingest_batch_distributed(
     ]
 
     def log_df(status: str, ok: int, fail: int, nbytes: int, ts: dt.datetime):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 {
                     "batch_id": batch_id,
@@ -297,9 +299,9 @@ def ingest_batch_distributed(
 
     log_df("RUNNING", 0, 0, 0, now).write.mode("append").parquet(batch_log_path)
 
-    loc_df = spark.createDataFrame(
-        loc_rows, "city string, latitude double, longitude double"
-    ).repartition(min(fetch_partitions, max(1, len(loc_rows))))
+    loc_df = local_frame(spark, loc_rows, LOCATIONS).repartition(
+        min(fetch_partitions, max(1, len(loc_rows)))
+    )
 
     def fetch_partition(batches):
         fetcher = fetcher_factory()  # one per task: executor-local state

@@ -7,6 +7,10 @@ oracle get a rows-run smoke check.
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 import pytest
 
 from end_to_end_data_engineering_pipeline_spark.queries import all_oracles, all_queries
@@ -35,3 +39,10 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
         # rows-only smoke: must execute and have a stable schema
         assert df.columns
         df.count()
+
+
+def test_p5_removes_its_warehouse(spark, sf_dir):
+    pattern = os.path.join(tempfile.gettempdir(), "p5_incr_*")
+    before = set(glob.glob(pattern))
+    assert QUERIES["p5_incremental_gold"](spark, sf_dir).collect()
+    assert set(glob.glob(pattern)) <= before

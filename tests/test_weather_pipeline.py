@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
+import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,7 +32,13 @@ from end_to_end_data_engineering_pipeline_spark.quality import (
     not_null_rule,
     range_rule,
 )
+from end_to_end_data_engineering_pipeline_spark.schemas import (
+    BATCH_LOG,
+    BRONZE_RESPONSES,
+    local_frame,
+)
 from end_to_end_data_engineering_pipeline_spark.sources import (
+    FetchResult,
     Location,
     ingest_batch,
     synthetic_fetcher,
@@ -424,3 +433,126 @@ def test_quarantine_split_reasons_and_partition(spark):
         4: ["range:v"],
     }
     assert good.count() + bad.count() == df.count()
+
+
+@pytest.fixture
+def utc_process(monkeypatch):
+    """``createDataFrame`` over a Python list reads naive datetimes in
+    the process's local zone; ``local_frame`` reads them in the session
+    zone (UTC). The engine runs with both in UTC, so compare there."""
+    monkeypatch.setenv("TZ", "UTC")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_local_frame_matches_list_path(spark, utc_process):
+    ts = dt.datetime(2026, 8, 1, 13, 5, 7, 123456)
+    bronze = [
+        {
+            "ingestion_id": "i1",
+            "batch_id": "b1",
+            "ingested_at": ts,
+            "source": "s",
+            "city": "Paris",
+            "latitude": 48.8566,
+            "longitude": 2.3522,
+            "requested_start": dt.date(2026, 8, 1),
+            "requested_end": dt.date(2026, 8, 3),
+            "http_status": 200,
+            "payload": '{"hourly": {}}',
+            "payload_bytes": 14,
+        },
+        {
+            "ingestion_id": "i2",
+            "batch_id": "b1",
+            "ingested_at": ts + dt.timedelta(microseconds=1),
+            "source": "s",
+            "city": "Lyon",
+            "latitude": None,
+            "longitude": None,
+            "requested_start": None,
+            "requested_end": None,
+            "http_status": None,
+            "payload": None,
+            "payload_bytes": None,
+        },
+    ]
+    log = [
+        {
+            "batch_id": "b1",
+            "source": "s",
+            "event_time": dt.datetime(1999, 12, 31, 23, 59, 59, 999999),
+            "requested_start": dt.date(1970, 1, 1),
+            "requested_end": None,
+            "locations": None,
+            "status": "RUNNING",
+            "http_success_count": None,
+            "http_failure_count": 0,
+            "total_payload_bytes": 2**40,
+        }
+    ]
+    for rows, schema in ((bronze, BRONZE_RESPONSES), (log, BATCH_LOG)):
+        got = local_frame(spark, rows, schema)
+        want = spark.createDataFrame(rows, schema)
+        assert got.schema == want.schema == schema
+        assert got.collect() == want.collect()
+        # None in a non-nullable field is still refused
+        bad = [dict(rows[0], batch_id=None)]
+        with pytest.raises(ValueError):
+            local_frame(spark, bad, schema)
+        with pytest.raises(ValueError):
+            spark.createDataFrame(bad, schema)
+
+
+def _stage_task_counts(spark, group: str) -> list[int]:
+    st = spark.sparkContext.statusTracker()
+    counts = []
+    for job_id in st.getJobIdsForGroup(group):
+        for stage_id in st.getJobInfo(job_id).stageIds:
+            info = st.getStageInfo(stage_id)
+            if info is not None:
+                counts.append(info.numTasks)
+    return counts
+
+
+def test_one_row_ingest_appends_stay_in_the_jvm(spark, tmp_path):
+    """Each append of a one-city batch is a 1-2 task job, not one
+    pickled-row task per core (defaultParallelism is 8 here)."""
+    wh = Warehouse(str(tmp_path))
+    group = f"one_row_ingest_{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "one-row ingest")
+    try:
+        ingest_batch(
+            spark, LOCS[:1], START, START, synthetic_fetcher(),
+            wh.bronze, wh.batch_log,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    counts = _stage_task_counts(spark, group)
+    assert len(counts) >= 3  # RUNNING row, bronze row, final row
+    assert max(counts) <= 2 < sc.defaultParallelism, counts
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_pipeline_releases_its_cached_batch(spark, tmp_path):
+    before = _persisted_rdds(spark)
+    run_pipeline(spark, str(tmp_path / "ok"), LOCS, START, END, synthetic_fetcher())
+    assert _persisted_rdds(spark) <= before
+
+    inner = synthetic_fetcher()
+
+    def too_hot(loc, start, end):
+        doc = json.loads(inner(loc, start, end).payload)
+        doc["hourly"]["temperature_2m"] = [99.0] * len(doc["hourly"]["time"])
+        return FetchResult(200, json.dumps(doc))
+
+    with pytest.raises(QualityGateError):
+        run_pipeline(spark, str(tmp_path / "bad"), LOCS, START, END, too_hot)
+    assert _persisted_rdds(spark) <= before
+    assert not os.path.exists(Warehouse(str(tmp_path / "bad")).silver)
