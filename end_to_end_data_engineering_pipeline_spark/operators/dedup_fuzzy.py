@@ -957,10 +957,13 @@ def _prefix_jaccard_candidates(
     # and at 100 TB the dfreq table (one row per distinct shingle)
     # cannot broadcast at all, so the planner would silently fall back
     # to shuffling the postings TWICE. The window form is one exchange
-    # by tok, period. (Skew note: a hot token's postings land in one
-    # partition; prefix tokens are by construction the RARE ones, and
-    # the count-only window never buffers rows, so this is safe where
-    # a sort-based window over the same key would not be.)
+    # by tok, period. (Skew note: this window runs over ALL tokens,
+    # before the prefix filter keeps the rare ones, and WindowExec
+    # sorts each task's rows by tok and buffers every token's postings
+    # — spillable, but all in one task. A hot token (a common shingle
+    # in a skewed corpus) is therefore one straggler task that may
+    # spill, where the groupBy + join-back shape combined its count
+    # map-side.)
     w_tok = Window.partitionBy("tok")
     # rarity rank per doc via a PARTITIONED window (one shuffle by id,
     # narrow rows) — replaces the r14 sort_array(collect_list) whose

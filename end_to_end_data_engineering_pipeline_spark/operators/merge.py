@@ -6,14 +6,23 @@ over existing rows with the same key. Vanilla Parquet has no MERGE, so
 (SURVEY §4.3.1):
 
     target.join(updates, keys, "left_anti")  UNION  updates
-    -> write temp dir -> atomic rename swap
+    -> write stage dir -> atomic rename swap
 
-Scale path: when the target is partitioned (e.g. by date), switch to
-partition-scoped dynamic overwrite (partitionOverwriteMode=dynamic,
-pinned per-write so it holds under any session) so only partitions
-present in `updates` are rewritten — the 100 TB variant of this operator touches GBs, not
-the full table. Delta Lake ``MERGE INTO`` is the drop-in replacement
-when its jars are on the classpath (import-gated; not in this image).
+Every table writer here — :func:`merge_upsert`, :func:`apply_changes`,
+:func:`scd2_apply`, and outside this module the model runner's
+``table``/``incremental`` materializations and the IVF index save —
+replaces its table through ONE commit protocol, :func:`_commit_table`:
+stage the new rows next to the target, count them from the staged
+Parquet footers, then make the stage the table.
+
+Scale path: the three writers take ``partition_col``. On a
+hive-partitioned target the merge reads only the partitions present
+in the batch (``_target_slice``) and the commit becomes a dynamic
+partition overwrite (partitionOverwriteMode=dynamic, pinned per write
+so it holds under any session) that replaces just those partitions —
+the 100 TB variant of this operator touches GBs, not the full table.
+Delta Lake ``MERGE INTO`` is the drop-in replacement when its jars are
+on the classpath (import-gated; not in this image).
 
 The anti-join broadcasts `updates` when it is small (a daily batch vs
 the accumulated table) — Catalyst/AQE decides via size estimate; we
@@ -30,6 +39,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .snapshots import _parquet_num_rows
 
 
 def _hive_unescape(name: str) -> str:
@@ -80,6 +91,115 @@ def _remove_partition_dirs(target_path: str, partition_col: str, values) -> None
             shutil.rmtree(full, ignore_errors=True)
 
 
+def _staged_rows(stage: str) -> int:
+    """Row count of the Parquet files under ``stage`` (partition dirs
+    included), summed from their footers — no Spark job."""
+    return sum(
+        _parquet_num_rows(os.path.join(d, f))
+        for d, _, files in os.walk(stage)
+        for f in files
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _commit_table(
+    spark: SparkSession,
+    df: DataFrame,
+    target_path: str,
+    partition_col: str | None = None,
+) -> int:
+    """Make ``df`` the Parquet table at ``target_path`` and return the
+    number of rows written — the one place a table directory is
+    replaced. ``df`` may read the target: its rows are written to a
+    uniquely named stage directory next to the target first (Spark
+    cannot overwrite a path it is reading — SURVEY §7 risk 4), and a
+    failed stage write leaves the table untouched.
+
+    Unpartitioned (or a partitioned table's first write): the stage
+    becomes the table by a rename swap; if the second rename fails the
+    old directory is renamed straight back, so a failure at any step
+    leaves the old table or the new one. With ``partition_col`` on an
+    existing table the stage is dynamically overwritten into it, so
+    only the partitions ``df`` holds rows for are replaced
+    (partitionOverwriteMode=dynamic, pinned per write: under Spark's
+    default static mode this overwrite would truncate every partition
+    NOT in ``df`` for any caller whose session lacks the factory's
+    conf); that step is only as atomic as Spark's dynamic-overwrite
+    job commit. A partitioned table of zero rows is no directory at
+    all (an empty partitioned write leaves nothing a read can infer a
+    schema from), so a first write of zero rows creates none.
+    """
+    exists = os.path.isdir(target_path)
+    token = uuid.uuid4().hex
+    stage = f"{target_path}.__stage_{token}"
+    try:
+        writer = df.write.mode("overwrite")
+        if partition_col is not None and not exists:
+            writer = writer.partitionBy(partition_col)
+        writer.parquet(stage)
+        n = _staged_rows(stage)
+        if partition_col is not None and exists:
+            spark.read.parquet(stage).write.option(
+                "partitionOverwriteMode", "dynamic"
+            ).mode("overwrite").partitionBy(partition_col).parquet(target_path)
+        elif n or partition_col is None:
+            _swap_in(stage, target_path, f"{target_path}.__old_{token}")
+        return n
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _swap_in(stage: str, target_path: str, old: str) -> None:
+    """Rename ``stage`` into place at ``target_path``, moving any
+    current table aside to ``old`` and back again if the second rename
+    fails — the committed table survives either way."""
+    if not os.path.isdir(target_path):
+        os.rename(stage, target_path)
+        return
+    os.rename(target_path, old)
+    try:
+        os.rename(stage, target_path)
+    except OSError:
+        os.rename(old, target_path)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _target_slice(
+    spark: SparkSession,
+    target_path: str,
+    batch: DataFrame,
+    partition_col: str | None,
+) -> tuple[DataFrame | None, list]:
+    """The part of the table at ``target_path`` a batch can touch, and
+    the batch's partition values: ``(None, [])`` when there is no
+    table yet; the whole table when unpartitioned; with
+    ``partition_col`` only the partitions the batch carries (partition
+    filter, no full scan). Partition-scoped writes require keys that
+    DETERMINE the partition (e.g. partition=day(ts) with ts in the
+    key), so a batch row can only ever collide with rows in its own
+    partition."""
+    if partition_col is None:
+        if not os.path.isdir(target_path):
+            return None, []
+        return spark.read.parquet(target_path), []
+    if partition_col not in batch.columns:
+        raise ValueError(f"batch must carry partition column {partition_col!r}")
+    # NULL partition values would land in __HIVE_DEFAULT_PARTITION__, which
+    # isin(parts) can never match: existing rows there would be dropped from
+    # the slice while dynamic overwrite still rewrites that partition. Refuse.
+    if batch.where(F.col(partition_col).isNull()).limit(1).count() > 0:
+        raise ValueError(
+            f"batch contains NULL {partition_col!r} values; a partition-"
+            "scoped write cannot address the default partition safely"
+        )
+    if not os.path.isdir(target_path):
+        return None, []
+    parts = [r[0] for r in batch.select(partition_col).distinct().collect()]
+    target = spark.read.parquet(target_path)
+    return target.where(F.col(partition_col).isin(parts)), parts
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -87,48 +207,47 @@ def merge_upsert(
     keys: Sequence[str],
     broadcast_updates: bool = True,
     allow_schema_evolution: bool = False,
+    partition_col: str | None = None,
 ) -> int:
     """Upsert ``updates`` into the Parquet table at ``target_path``.
 
-    Returns the resulting row count. Handles the read-modify-write
-    hazard (Spark cannot overwrite a path it is reading — SURVEY §7
-    risk 4) via write-to-temp + atomic directory swap.
+    Returns the resulting row count — of the whole table, or with
+    ``partition_col`` of the partitions the batch rewrote; only those
+    are read and rewritten, so cost is bound by the batch's partition
+    spread, not the table size (see :func:`_target_slice` for the key
+    contract).
 
     ``allow_schema_evolution``: with it, a column present on only one
     side is null-filled on the other (unionByName
     allowMissingColumns — Delta MERGE's autoMerge analog), so adding a
     column to the pipeline doesn't force a table rebuild; without it,
     schema drift raises (the safe default — silent drift at 100 TB is
-    how a corrupted gold layer happens).
+    how a corrupted gold layer happens). It cannot be combined with
+    ``partition_col``: an evolved column would reach only the
+    partitions a batch rewrites, and a later slice read may infer the
+    schema from a file without it.
 
     ``updates`` is cached for the merge unless the caller already
     persisted it; a caller's cache is left for the caller to release.
     """
+    if partition_col is not None and allow_schema_evolution:
+        raise ValueError(
+            "allow_schema_evolution is not supported with partition_col"
+        )
     owned = not updates.is_cached
     if owned:
         updates = updates.cache()
     try:
-        if os.path.isdir(target_path):
-            target = spark.read.parquet(target_path)
+        target, _ = _target_slice(spark, target_path, updates, partition_col)
+        if target is None:
+            merged = updates
+        else:
             upd = F.broadcast(updates) if broadcast_updates else updates
             kept = target.join(upd.select(*keys), list(keys), "left_anti")
             merged = kept.unionByName(
                 updates, allowMissingColumns=allow_schema_evolution
             )
-        else:
-            merged = updates
-
-        tmp = f"{target_path}.__tmp_{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
-        old = f"{target_path}.__old_{uuid.uuid4().hex}"
-        if os.path.isdir(target_path):
-            os.rename(target_path, old)
-            os.rename(tmp, target_path)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(tmp, target_path)
-        return n
+        return _commit_table(spark, merged, target_path, partition_col)
     finally:
         if owned:
             updates.unpersist()
@@ -151,74 +270,6 @@ def latest_wins(log: DataFrame, key: str, order_col: str) -> DataFrame:
     )
 
 
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: Sequence[str],
-    partition_col: str,
-    broadcast_updates: bool = True,
-) -> int:
-    """Partition-scoped MERGE (the 100 TB variant of merge_upsert).
-
-    Requires a hive-partitioned target (``partitionBy(partition_col)``)
-    and keys that DETERMINE the partition (e.g. partition=day(ts) with
-    ts in the key): an update then can only ever collide with rows in
-    its own partition, so the merge reads and rewrites ONLY the
-    partitions present in ``updates`` — cost is bound by the update
-    batch's partition spread, not the table size.
-
-    Mechanics: prune target to affected partitions (partition filter,
-    no full scan) -> anti-join + union within them -> stage the merged
-    slice to a temp dir (the self-read hazard applies to the slice
-    too) -> dynamic partition overwrite of just those partitions
-    (partitionOverwriteMode=dynamic, pinned as a per-write option so
-    the semantics do not depend on session conf).
-    Returns the row count of the rewritten partitions.
-    """
-    if partition_col not in updates.columns:
-        raise ValueError(f"updates must carry partition column {partition_col!r}")
-    # NULL partition values would land in __HIVE_DEFAULT_PARTITION__, which
-    # isin(parts) can never match: existing rows there would be dropped from
-    # `kept` while dynamic overwrite still rewrites that partition. Refuse.
-    if updates.where(F.col(partition_col).isNull()).limit(1).count() > 0:
-        raise ValueError(
-            f"updates contain NULL {partition_col!r} values; partition-scoped "
-            "merge cannot address the default partition safely"
-        )
-    if not os.path.isdir(target_path):
-        updates.write.mode("overwrite").partitionBy(partition_col).parquet(
-            target_path
-        )
-        return updates.count()
-
-    parts = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    target = spark.read.parquet(target_path)
-    affected = target.where(F.col(partition_col).isin(parts))
-    upd = F.broadcast(updates) if broadcast_updates else updates
-    kept = affected.join(upd.select(*keys), list(keys), "left_anti")
-    merged = kept.unionByName(updates.select(*affected.columns))
-
-    tmp = f"{target_path}.__stage_{uuid.uuid4().hex}"
-    try:
-        merged.write.mode("overwrite").parquet(tmp)
-        staged = spark.read.parquet(tmp)
-        n = staged.count()
-        # dynamic mode: only partitions present in `staged` are replaced.
-        # Pinned per-write (not via session conf): under Spark's default
-        # static mode this overwrite would truncate every partition NOT in
-        # the update batch — silent data loss for any caller whose session
-        # lacks the factory's conf.
-        staged.write.option(
-            "partitionOverwriteMode", "dynamic"
-        ).mode("overwrite").partitionBy(partition_col).parquet(target_path)
-        return n
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def apply_changes(
     spark: SparkSession,
     target_path: str,
@@ -235,140 +286,60 @@ def apply_changes(
     ``changes`` carries ``op_col`` in {'I','U','D'} and a monotonically
     increasing ``seq_col``; per key, the LATEST change wins (latest_wins
     keeps the reference's batch-log resolution semantics): I/U upserts
-    the row, D removes the key. Returns the new table row count.
+    the row, D removes the key. Returns the new table row count (with
+    ``partition_col``, of the rewritten partitions).
 
     Scale: same anti-join + union shape as merge_upsert — the delete
     set rides the same broadcast as the upsert keys, so deletes are
     free. With ``partition_col`` (hive-partitioned target; every
     change row, deletes included, carries the partition value, and
-    keys determine the partition as in merge_upsert_partitioned) the
-    apply composes with partition pruning: only partitions present in
-    the change batch are read and rewritten — the 100 TB variant where
-    a CDC batch touches GBs, not the table.
+    keys determine the partition as in merge_upsert) only partitions
+    present in the change batch are read and rewritten — the 100 TB
+    variant where a CDC batch touches GBs, not the table. A partition
+    whose rows the batch deletes entirely is removed, and so is a
+    table left with none.
     """
-    if partition_col is not None:
-        return _apply_changes_partitioned(
-            spark, target_path, changes, keys, seq_col, op_col, partition_col
-        )
     data_cols = [c for c in changes.columns if c not in (op_col, seq_col)]
+    target, parts = _target_slice(spark, target_path, changes, partition_col)
     latest = latest_wins(changes, list(keys), seq_col)
     upserts = latest.where(F.col(op_col) != "D").select(*data_cols)
-    touched = latest.select(*keys)
-
-    if not os.path.isdir(target_path):
+    if target is None:
         merged = upserts
     else:
-        old = spark.read.parquet(target_path)
-        kept = old.join(F.broadcast(touched), list(keys), "left_anti")
-        merged = kept.unionByName(upserts)
-
-    tmp = f"{target_path}.__stage_{uuid.uuid4().hex}"
-    try:
-        merged.write.mode("overwrite").parquet(tmp)
-        staged = spark.read.parquet(tmp)
-        n = staged.count()
-        staged.write.mode("overwrite").parquet(target_path)
-        return n
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _apply_changes_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    changes: DataFrame,
-    keys: Sequence[str],
-    seq_col: str,
-    op_col: str,
-    partition_col: str,
-) -> int:
-    """CDC apply scoped to the partitions present in the change batch
-    (apply_changes x merge_upsert_partitioned): untouched partitions
-    are neither read nor rewritten — their files keep identity.
-
-    One extra contract beyond merge_upsert_partitioned: a partition
-    whose rows are ALL deleted produces no staged rows, and dynamic
-    overwrite can only replace partitions it writes — such partitions
-    are removed explicitly (bounded by the batch's partition spread).
-    """
-    data_cols = [c for c in changes.columns if c not in (op_col, seq_col)]
-    if partition_col not in data_cols:
-        raise ValueError(
-            f"changes must carry partition column {partition_col!r} "
-            "(deletes included)"
-        )
-    if changes.where(F.col(partition_col).isNull()).limit(1).count() > 0:
-        raise ValueError(
-            f"changes contain NULL {partition_col!r} values; partition-"
-            "scoped apply cannot address the default partition safely"
-        )
-    latest = latest_wins(changes, list(keys), seq_col).cache()
-    try:
-        upserts = latest.where(F.col(op_col) != "D").select(*data_cols)
         touched = latest.select(*keys)
-
-        if not os.path.isdir(target_path):
-            n = upserts.count()
-            if n == 0:
-                # an all-delete batch onto a nonexistent table: writing
-                # would leave a partition-less _SUCCESS shell that no
-                # later read can infer a schema from — leave no dir,
-                # the canonical "empty partitioned table" form here
-                return 0
-            upserts.write.mode("overwrite").partitionBy(
-                partition_col
-            ).parquet(target_path)
-            return n
-
-        parts = [
-            r[0] for r in latest.select(partition_col).distinct().collect()
-        ]
-        target = spark.read.parquet(target_path)
-        affected = target.where(F.col(partition_col).isin(parts))
-        kept = affected.join(F.broadcast(touched), list(keys), "left_anti")
-        merged = kept.unionByName(upserts.select(*affected.columns))
-
-        tmp = f"{target_path}.__stage_{uuid.uuid4().hex}"
-        try:
-            merged.write.mode("overwrite").parquet(tmp)
-            staged = spark.read.parquet(tmp)
-            n = staged.count()
-            staged.write.option(
-                "partitionOverwriteMode", "dynamic"
-            ).mode("overwrite").partitionBy(partition_col).parquet(
-                target_path
-            )
-            # fully-deleted partitions never appear in `staged`; clear
-            # their dirs by matching the actual on-disk (hive-escaped)
-            # names — see _remove_partition_dirs. Compare CANONICAL
-            # value strings, not raw Python values: the union with the
-            # read-back target can coerce the partition column's type
-            # (e.g. string changes vs int-inferred partition dirs), and
-            # a raw set difference would then flag a just-written
-            # partition as deleted and remove it.
-            present = {
-                _partition_value_str(r[0])
-                for r in staged.select(partition_col).distinct().collect()
-            }
-            _remove_partition_dirs(
-                target_path,
-                partition_col,
-                [p for p in parts if _partition_value_str(p) not in present],
-            )
-            # a batch that deleted EVERY remaining partition leaves a
-            # partition-less shell no read can infer a schema from —
-            # drop the dir so the table reads as nonexistent, matching
-            # the empty-onto-missing case above
-            if not any(
-                "=" in d and not d.startswith((".", "_"))
-                for d in os.listdir(target_path)
-            ):
-                shutil.rmtree(target_path, ignore_errors=True)
-            return n
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        kept = target.join(F.broadcast(touched), list(keys), "left_anti")
+        merged = kept.unionByName(upserts)
+    if not parts:
+        return _commit_table(spark, merged, target_path, partition_col)
+    # dynamic overwrite replaces only the partitions `merged` holds rows
+    # for, so a partition the batch empties is removed here, after the
+    # commit. `merged` is cached so finding those partitions does not
+    # compute the merge twice.
+    merged = merged.cache()
+    try:
+        # Compare CANONICAL value strings, not raw Python values: the
+        # union with the read-back target can coerce the partition
+        # column's type (e.g. string changes vs int-inferred partition
+        # dirs), and a raw set difference would then flag a partition
+        # that keeps rows as emptied and remove it.
+        present = {
+            _partition_value_str(r[0])
+            for r in merged.select(partition_col).distinct().collect()
+        }
+        n = _commit_table(spark, merged, target_path, partition_col)
     finally:
-        latest.unpersist()
+        merged.unpersist()
+    _remove_partition_dirs(
+        target_path,
+        partition_col,
+        [p for p in parts if _partition_value_str(p) not in present],
+    )
+    if not any(
+        "=" in d and not d.startswith((".", "_"))
+        for d in os.listdir(target_path)
+    ):
+        shutil.rmtree(target_path, ignore_errors=True)
+    return n
 
 
 def scd2_history(
@@ -448,53 +419,38 @@ def scd2_apply(
     batches land on EXACTLY the table the one-shot rebuild produces
     (pinned by a hypothesis property), provided each key's seqs are
     increasing across batches — the same ordering contract
-    ``apply_changes`` already requires.
+    ``apply_changes`` already requires. Returns the history row count
+    (with ``partition_col``, of the rewritten partitions).
 
     Scale: the batch is the small side everywhere — its history is a
     batch-local window, the close-set join broadcasts (batch keys,
     close_seq), and untouched history rows stream through unmodified.
-    Same staged overwrite protocol as ``apply_changes``.
 
     With ``partition_col`` (hive-partitioned history; the partition
-    must be a FUNCTION OF THE KEY, as in merge_upsert_partitioned, so
-    a key's open record always lives in a partition the batch
-    touches) only the batch's partitions are read and rewritten —
-    history is append-mostly, so at 100 TB this is the difference
-    between rewriting GBs and rewriting the table.
+    must be a FUNCTION OF THE KEY, as in merge_upsert, so a key's open
+    record always lives in a partition the batch touches) only the
+    batch's partitions are read and rewritten — history is
+    append-mostly, so at 100 TB this is the difference between
+    rewriting GBs and rewriting the table. History never deletes
+    rows, so no partition can vanish.
     """
-    if partition_col is not None:
-        return _scd2_apply_partitioned(
-            spark, target_path, changes, keys, seq_col, op_col, partition_col
-        )
+    target, _ = _target_slice(spark, target_path, changes, partition_col)
     batch_hist = scd2_history(changes, list(keys), seq_col, op_col)
-    close_seqs = changes.groupBy(*keys).agg(
-        F.min(seq_col).alias("__close_seq")
-    )
-
-    if not os.path.isdir(target_path):
+    if target is None:
         # a first batch whose effective history is empty (e.g. deletes
-        # against nothing) creates NO table — the same no-op contract as
-        # the partitioned variant, so the two stay interchangeable
-        # (hypothesis-pinned; a D-only opening batch used to create an
-        # empty table here but nothing there)
+        # against nothing) creates NO table, partitioned or not, so the
+        # two stay interchangeable (hypothesis-pinned)
         if batch_hist.limit(1).count() == 0:
             return 0
         merged = batch_hist
     else:
-        old = spark.read.parquet(target_path)
-        merged = _close_open_records(old, close_seqs, keys).unionByName(
+        close_seqs = changes.groupBy(*keys).agg(
+            F.min(seq_col).alias("__close_seq")
+        )
+        merged = _close_open_records(target, close_seqs, keys).unionByName(
             batch_hist
         )
-
-    tmp = f"{target_path}.__stage_{uuid.uuid4().hex}"
-    try:
-        merged.write.mode("overwrite").parquet(tmp)
-        staged = spark.read.parquet(tmp)
-        n = staged.count()
-        staged.write.mode("overwrite").parquet(target_path)
-        return n
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _commit_table(spark, merged, target_path, partition_col)
 
 
 def _close_open_records(
@@ -514,65 +470,6 @@ def _close_open_records(
             "is_current"
         ),
     )
-
-
-def _scd2_apply_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    changes: DataFrame,
-    keys: Sequence[str],
-    seq_col: str,
-    op_col: str,
-    partition_col: str,
-) -> int:
-    """Partition-scoped incremental SCD2: read/close/rewrite ONLY the
-    partitions present in the batch (dynamic partition overwrite).
-    History never deletes rows, so — unlike the CDC apply — no
-    partition can vanish and no dir cleanup is needed. Returns the
-    row count of the rewritten partitions."""
-    if partition_col not in changes.columns:
-        raise ValueError(
-            f"changes must carry partition column {partition_col!r}"
-        )
-    if changes.where(F.col(partition_col).isNull()).limit(1).count() > 0:
-        raise ValueError(
-            f"changes contain NULL {partition_col!r} values; partition-"
-            "scoped apply cannot address the default partition safely"
-        )
-    batch_hist = scd2_history(changes, list(keys), seq_col, op_col)
-    close_seqs = changes.groupBy(*keys).agg(
-        F.min(seq_col).alias("__close_seq")
-    )
-
-    if not os.path.isdir(target_path):
-        n = batch_hist.count()
-        if n == 0:
-            return 0
-        batch_hist.write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(target_path)
-        return n
-
-    parts = [
-        r[0] for r in changes.select(partition_col).distinct().collect()
-    ]
-    target = spark.read.parquet(target_path)
-    affected = target.where(F.col(partition_col).isin(parts))
-    merged = _close_open_records(affected, close_seqs, keys).unionByName(
-        batch_hist.select(*affected.columns)
-    )
-
-    tmp = f"{target_path}.__stage_{uuid.uuid4().hex}"
-    try:
-        merged.write.mode("overwrite").parquet(tmp)
-        staged = spark.read.parquet(tmp)
-        n = staged.count()
-        staged.write.option("partitionOverwriteMode", "dynamic").mode(
-            "overwrite"
-        ).partitionBy(partition_col).parquet(target_path)
-        return n
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def incremental_agg_delta(

@@ -410,7 +410,8 @@ def ivf_save_index(
     by every serving query. Storing it relationally (rather than
     driver-side pickle) keeps it readable by any engine and lets the
     assignment join run without re-training."""
-    from pyspark.sql import functions as F  # noqa: F401
+    import json
+
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -420,6 +421,9 @@ def ivf_save_index(
         StructType,
     )
 
+    from ..schemas import local_frame
+    from .merge import _commit_table
+
     schema = StructType(
         [
             StructField("cell_id", IntegerType(), False),
@@ -427,27 +431,14 @@ def ivf_save_index(
             StructField("meta", StringType(), True),
         ]
     )
-    import json as _json
-
-    meta_s = _json.dumps(meta or {}, sort_keys=True)
-    rows = [(i, c, meta_s if i == 0 else None) for i, c in enumerate(centroids)]
-    # stage + atomic rename: a crash mid-write must never leave a
-    # partial directory that a later isdir() check mistakes for a
-    # complete index
-    import os
-    import shutil
-    import uuid as _uuid
-
-    tmp = f"{path}.__stage_{_uuid.uuid4().hex}"
-    try:
-        spark.createDataFrame(rows, schema).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    meta_s = json.dumps(meta or {}, sort_keys=True)
+    rows = [
+        {"cell_id": i, "centroid": c, "meta": meta_s if i == 0 else None}
+        for i, c in enumerate(centroids)
+    ]
+    # a staged commit: a crash mid-write must never leave a partial
+    # directory that a later isdir() check mistakes for a complete index
+    _commit_table(spark, local_frame(spark, rows, schema).repartition(1), path)
 
 
 def ivf_load_index(spark, path: str) -> list[list[int]]:

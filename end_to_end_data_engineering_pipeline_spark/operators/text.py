@@ -987,35 +987,6 @@ def tokenize_tf(docs: DataFrame) -> DataFrame:
     )
 
 
-def _overlap_commits(*thunks) -> None:
-    """Run independent single-store commit thunks as OVERLAPPING
-    driver threads (guide §2.6: Spark happily runs several jobs at
-    once inside one application; actions are only sequential because
-    the driver calls them sequentially). The multi-store index
-    increments commit 3 stores with no cross-store dependency, and
-    each commit is a chain of small jobs plus driver-side staging /
-    manifest work — overlapped, one store's driver phase back-fills
-    the cores another store's job left idle (r17 A/B: t51's timed
-    operator 1.23s -> 0.96s min-of-5 at sf0.1).
-
-    ``inheritable_thread_target`` carries the caller thread's
-    JVM-local properties (job description / group) into the pool so
-    per-key profiling attribution survives. Exceptions re-raise in
-    the caller (first failure wins); sibling commits may have already
-    landed — exactly the crash-consistency surface the stores'
-    ``increment_id`` stamp protocol already covers (a retry probes
-    per-store stamps, sequential or not)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    wrapped = [inheritable_thread_target(t) for t in thunks]
-    with ThreadPoolExecutor(max_workers=len(wrapped)) as pool:
-        futures = [pool.submit(w) for w in wrapped]
-        for f in futures:
-            f.result()
-
-
 def _increment_applied(store_path: str, increment_id: str | None) -> bool:
     """Whether ``store_path``'s current manifest already carries the
     applied-increment stamp for ``increment_id`` — the retry probe
@@ -1127,9 +1098,11 @@ def postings_increment(
                 extra_update=stamp,
             )
 
-    # the three stores are independent (no commit reads another
-    # store's post-increment state) — overlap them (guide §2.6)
-    _overlap_commits(_postings, _dfreq, _meta)
+    # serial, meta LAST: the streaming sink skips any epoch meta has
+    # recorded, so meta must never land before a commit that can fail
+    _postings()
+    _dfreq()
+    _meta()
 
 
 def bm25_increment(
@@ -1228,6 +1201,7 @@ def bm25_increment(
                 extra_update=stamp,
             )
 
-    # independent stores (meta reads only PRE-increment state), so the
-    # retry contract is unchanged by overlap — see _overlap_commits
-    _overlap_commits(_postings, _dfreq, _meta)
+    # serial, meta LAST, as in postings_increment
+    _postings()
+    _dfreq()
+    _meta()

@@ -10,10 +10,13 @@ with a name + materialization:
                (dbt's incremental materialization; the reference's
                ON CONFLICT upsert, transformation/clean_data.py:222-243).
                With ``partition_col`` set the merge is partition-scoped
-               (operators/merge.py merge_upsert_partitioned): only
-               partitions present in this run's output are read and
-               rewritten — the 100 TB gold-layer path, where a daily
-               run touches GBs while the table holds years.
+               (operators/merge.py merge_upsert): only partitions
+               present in this run's output are read and rewritten —
+               the 100 TB gold-layer path, where a daily run touches
+               GBs while the table holds years.
+
+Both Parquet materializations commit through operators/merge.py's
+staged commit, so a failed build leaves the previous table in place.
 
 Dependencies are implicit: a model's body reads upstream models via
 ``spark.table(name)`` (the analog of dbt ``ref()``); registration
@@ -40,8 +43,20 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 ModelFn = Callable[[SparkSession], DataFrame]
+
+_AUDIT_SCHEMA = T.StructType(
+    [
+        T.StructField("model", T.StringType()),
+        T.StructField("column", T.StringType()),
+        T.StructField("test", T.StringType()),
+        T.StructField("violations", T.LongType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("checked_at", T.TimestampType()),
+    ]
+)
 
 
 @dataclass
@@ -109,29 +124,19 @@ class ModelRunner:
         """Build every model in registration order; return name -> DF.
         If a manifest is present (and run_tests), execute it after the
         build and raise QualityGateError on any violation."""
-        from ..operators.merge import merge_upsert, merge_upsert_partitioned
+        from ..operators.merge import _commit_table, merge_upsert
 
         out: dict[str, DataFrame] = {}
         for m in self.models:
             df = m.fn(spark)
+            path = os.path.join(self.warehouse_dir, m.name)
             if m.materialization == "table":
-                path = os.path.join(self.warehouse_dir, m.name)
-                tmp = path + ".__tmp"
-                df.write.mode("overwrite").parquet(tmp)
-                if os.path.isdir(path):
-                    import shutil
-
-                    shutil.rmtree(path)
-                os.rename(tmp, path)
+                _commit_table(spark, df, path)
                 df = spark.read.parquet(path)
             elif m.materialization == "incremental":
-                path = os.path.join(self.warehouse_dir, m.name)
-                if m.partition_col is not None:
-                    merge_upsert_partitioned(
-                        spark, path, df, m.unique_key, m.partition_col
-                    )
-                else:
-                    merge_upsert(spark, path, df, m.unique_key)
+                merge_upsert(
+                    spark, path, df, m.unique_key, partition_col=m.partition_col
+                )
                 df = spark.read.parquet(path)
             df.createOrReplaceTempView(m.name)
             out[m.name] = df
@@ -210,14 +215,13 @@ class ModelRunner:
         import json
 
         from ..quality.expectations import QualityGateError
+        from ..schemas import local_frame
 
         results = self.manifest_results(spark, built)
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         audit_path = os.path.join(self.warehouse_dir, "_model_test_results")
-        spark.createDataFrame(
-            [{**r, "checked_at": now} for r in results],
-            "model string, column string, test string, violations long, "
-            "status string, checked_at timestamp",
+        local_frame(
+            spark, [{**r, "checked_at": now} for r in results], _AUDIT_SCHEMA
         ).write.mode("append").parquet(audit_path)
         failed = [r for r in results if r["status"] != "PASS"]
         if failed:

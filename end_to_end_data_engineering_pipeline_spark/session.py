@@ -19,7 +19,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the cores this process may run on (its affinity mask, which a
+# container's CPU set narrows), not the host's count
+DEFAULT_CPUS = len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -28,7 +30,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session with engine-standard configuration."""
+    """Build (or fetch) the session with engine-standard configuration.
+
+    ``extra_conf`` is applied last, so it overrides any setting here
+    (driver memory, listing threshold, AQE coalescing, ...)."""
     cpus = DEFAULT_CPUS
     builder = (
         SparkSession.builder.appName(app_name)
@@ -48,17 +53,15 @@ def get_spark(
         # see OPTIMIZATION_r17.md). At 100 TB production scale the §2.2
         # "fewer, larger reduce partitions" goal is met by the advisory
         # size itself (shuffles there are GBs, so parallelismFirst
-        # rarely binds); set SPARK_GRAFT_PARALLELISM_FIRST=false only
-        # with a cluster-measured advisory size (docs/SCALE.md).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
-        )
+        # rarely binds); pass extra_conf={"spark.sql.adaptive.
+        # coalescePartitions.parallelismFirst": "false"} only with a
+        # cluster-measured advisory size (docs/SCALE.md).
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # the events fixture stores TIMESTAMP(NANOS) which Spark's parquet
@@ -71,12 +74,9 @@ def get_spark(
         # driver-side — and the DML lifecycle keys build 6-12 such
         # relations per run. On local/HDFS-class filesystems serial
         # stats are cheap; for object stores (S3-class, ~10-30 ms per
-        # stat) lower SPARK_GRAFT_LIST_THRESHOLD back toward 32 so
-        # wide reads list in parallel (OPTIMIZATION_r16.md §I/O).
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "1024"),
-        )
+        # stat) lower it back toward 32 through extra_conf so wide
+        # reads list in parallel (OPTIMIZATION_r16.md §I/O).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     # NOTE (r15): Catalyst's InferFiltersFromGenerate synthesizes
     # `size(e) > 0` under a non-outer explode and pushdown substitutes

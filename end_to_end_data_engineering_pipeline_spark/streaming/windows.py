@@ -329,9 +329,14 @@ def streaming_postings_index_sink(
     txnVersion idiom — and a re-delivered epoch is skipped WHOLE, so
     a crash between the postings append and the checkpoint commit
     cannot double-count a batch. Epochs are monotonic per checkpoint,
-    which is exactly the contract the guard needs. Pinned in
-    tests/test_streaming.py by re-delivering an epoch and comparing
-    against a batch rebuild of the composed corpus."""
+    which is exactly the contract the guard needs. Both the bootstrap
+    and postings_increment commit meta LAST, so an epoch whose
+    postings or dfreq commit failed is not yet recorded and re-runs:
+    a bootstrap re-run overwrites what the failed one left, and an
+    increment's ``increment_id`` is its epoch, so its re-run skips
+    the stores the failed run already reached. Pinned in tests/test_streaming.py by
+    re-delivering an epoch and comparing against a batch rebuild of
+    the composed corpus."""
     from ..operators.snapshots import (
         list_versions,
         snapshot_read,
@@ -342,16 +347,20 @@ def streaming_postings_index_sink(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if not list_versions(store + "/postings"):
-            # bootstrap: first batch IS the base index
+        if not list_versions(store + "/meta"):
+            # bootstrap: first batch IS the base index. Keyed on meta,
+            # which commits last, and written in overwrite mode, so a
+            # bootstrap that failed part-way runs again over whatever
+            # postings/dfreq it left.
             tf = tokenize_tf(batch_df)
-            snapshot_write(spark, store + "/postings", tf)
+            snapshot_write(spark, store + "/postings", tf, mode="overwrite")
             snapshot_write(
                 spark,
                 store + "/dfreq",
                 tf.groupBy("w").agg(
                     F.count(F.lit(1)).cast("long").alias("df")
                 ),
+                mode="overwrite",
             )
             snapshot_write(
                 spark,
@@ -360,6 +369,7 @@ def streaming_postings_index_sink(
                     F.count(F.lit(1)).cast("long").alias("n_docs"),
                     F.lit(int(epoch_id)).cast("long").alias("last_epoch"),
                 ),
+                mode="overwrite",
             )
             return
         meta = snapshot_read(spark, store + "/meta").collect()[0]
@@ -377,7 +387,9 @@ def streaming_postings_index_sink(
             (F.col("n_docs") + F.col("b")).cast("long").alias("n_docs"),
             F.lit(int(epoch_id)).cast("long").alias("last_epoch"),
         )
-        postings_increment(spark, store, batch_df, n_total)
+        postings_increment(
+            spark, store, batch_df, n_total, increment_id=f"epoch-{epoch_id}"
+        )
 
     return (
         docs.writeStream.outputMode("append")

@@ -152,3 +152,19 @@ def test_rotation_policy_maximizes_min_freshness():
     # the ledger only names registered queries (no typos / stale keys)
     unknown = [q for q in registry.VALIDATED_ROUND if q not in registry.all_queries()]
     assert unknown == []
+
+
+def test_default_cpus_follow_affinity_not_env(monkeypatch):
+    """The default session is sized from the cores this process may
+    run on; a SPARK_GRAFT_CPUS value no longer overrides it."""
+    import importlib
+
+    from end_to_end_data_engineering_pipeline_spark import session
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    try:
+        importlib.reload(session)
+        assert session.DEFAULT_CPUS == len(os.sched_getaffinity(0))
+    finally:
+        monkeypatch.undo()
+        importlib.reload(session)

@@ -97,7 +97,6 @@ def test_merge_upsert_partitioned_matches_plain(spark, tmp_path):
 
     from end_to_end_data_engineering_pipeline_spark.operators.merge import (
         merge_upsert,
-        merge_upsert_partitioned,
     )
 
     rows = [(d, k, 1, "old") for d in ("d1", "d2", "d3") for k in range(4)]
@@ -105,13 +104,13 @@ def test_merge_upsert_partitioned_matches_plain(spark, tmp_path):
     plain, part = str(tmp_path / "plain"), str(tmp_path / "part")
     base = spark.createDataFrame(rows, cols)
     merge_upsert(spark, plain, base, ["day", "k"])
-    merge_upsert_partitioned(spark, part, base, ["day", "k"], "day")
+    merge_upsert(spark, part, base, ["day", "k"], partition_col="day")
 
     upd = spark.createDataFrame(
         [("d2", 0, 2, "new"), ("d2", 99, 2, "new")], cols
     )
     merge_upsert(spark, plain, upd, ["day", "k"])
-    n = merge_upsert_partitioned(spark, part, upd, ["day", "k"], "day")
+    n = merge_upsert(spark, part, upd, ["day", "k"], partition_col="day")
     assert n == 5  # d2 partition after merge: k in {0,1,2,3,99}
 
     canon = lambda p: sorted(  # noqa: E731
@@ -133,21 +132,178 @@ def test_merge_upsert_partitioned_rejects_null_partition(spark, tmp_path):
     import pytest
 
     from end_to_end_data_engineering_pipeline_spark.operators.merge import (
-        merge_upsert_partitioned,
+        merge_upsert,
     )
 
     cols = ["day", "k", "ts", "val"]
     part = str(tmp_path / "part")
     base = spark.createDataFrame([("d1", 0, 1, "old")], cols)
-    merge_upsert_partitioned(spark, part, base, ["day", "k"], "day")
+    merge_upsert(spark, part, base, ["day", "k"], partition_col="day")
 
     upd = spark.createDataFrame(
         [(None, 1, 2, "new")], "day string, k long, ts long, val string"
     )
     with pytest.raises(ValueError, match="NULL"):
-        merge_upsert_partitioned(spark, part, upd, ["day", "k"], "day")
+        merge_upsert(spark, part, upd, ["day", "k"], partition_col="day")
     # target untouched
     assert spark.read.parquet(part).count() == 1
+
+
+def test_merge_upsert_partitioned_refuses_schema_evolution(spark, tmp_path):
+    """Schema evolution is refused on a partitioned merge: an evolved
+    column would reach only the partitions one batch rewrites."""
+    from end_to_end_data_engineering_pipeline_spark.operators.merge import (
+        merge_upsert,
+    )
+
+    part = str(tmp_path / "part")
+    base = spark.createDataFrame([("d1", 0, "old")], ["day", "k", "val"])
+    merge_upsert(spark, part, base, ["day", "k"], partition_col="day")
+    upd = spark.createDataFrame(
+        [("d1", 0, "new", 1)], ["day", "k", "val", "extra"]
+    )
+    with pytest.raises(ValueError, match="allow_schema_evolution"):
+        merge_upsert(
+            spark,
+            part,
+            upd,
+            ["day", "k"],
+            allow_schema_evolution=True,
+            partition_col="day",
+        )
+    assert _table_rows(spark, part) == [(0, "old", "d1")]
+
+
+def _commit_leftovers(path: str) -> list[str]:
+    """Stage/old directories a table commit left beside ``path``."""
+    import os
+
+    parent, name = os.path.split(path)
+    return [d for d in os.listdir(parent) if d.startswith(name + ".__")]
+
+
+def _poisoned(df):
+    """``df`` whose plan raises while a job over it executes."""
+    return df.where(F.raise_error(F.lit("injected write failure")).isNull())
+
+
+def _table_rows(spark, path: str) -> list:
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+@pytest.mark.parametrize("partition_col", [None, "day"])
+def test_merge_upsert_failed_write_keeps_table(spark, tmp_path, partition_col):
+    """A merge whose plan raises at execution leaves the previous table
+    readable and equal to before, with no stage directory beside it."""
+    from end_to_end_data_engineering_pipeline_spark.operators.merge import (
+        merge_upsert,
+    )
+
+    path = str(tmp_path / "t")
+    cols = ["day", "k", "val"]
+    base = spark.createDataFrame([("d1", 0, "old"), ("d2", 1, "old")], cols)
+    merge_upsert(spark, path, base, ["day", "k"], partition_col=partition_col)
+    before = _table_rows(spark, path)
+
+    upd = _poisoned(spark.createDataFrame([("d1", 0, "new")], cols))
+    with pytest.raises(Exception, match="injected write failure"):
+        merge_upsert(spark, path, upd, ["day", "k"], partition_col=partition_col)
+    assert _table_rows(spark, path) == before
+    assert _commit_leftovers(path) == []
+
+
+def test_model_table_failed_build_keeps_table(spark, tmp_path):
+    """A ``table`` model whose plan raises on a rebuild keeps the table
+    the previous run committed."""
+    from end_to_end_data_engineering_pipeline_spark.plans import ModelRunner
+
+    runner = ModelRunner(warehouse_dir=str(tmp_path / "wh"))
+    fail = []
+
+    @runner.model("agg", materialization="table")
+    def agg(spark):
+        df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+        return _poisoned(df) if fail else df
+
+    runner.run(spark)
+    path = str(tmp_path / "wh" / "agg")
+    before = _table_rows(spark, path)
+    fail.append(True)
+    with pytest.raises(Exception, match="injected write failure"):
+        runner.run(spark)
+    assert _table_rows(spark, path) == before
+    assert _commit_leftovers(path) == []
+
+
+def test_ivf_save_failed_write_keeps_index(spark, tmp_path, monkeypatch):
+    """Re-saving an IVF index whose write raises at execution keeps the
+    saved index loadable and unchanged."""
+    from end_to_end_data_engineering_pipeline_spark import schemas
+    from end_to_end_data_engineering_pipeline_spark.operators.similarity import (
+        ivf_load_index,
+        ivf_save_index,
+    )
+
+    path = str(tmp_path / "ivf")
+    ivf_save_index(spark, [[1, 2], [3, 4]], path)
+    real = schemas.local_frame
+    monkeypatch.setattr(
+        schemas, "local_frame", lambda *a: _poisoned(real(*a))
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        ivf_save_index(spark, [[5, 6], [7, 8]], path)
+    assert ivf_load_index(spark, path) == [[1, 2], [3, 4]]
+    assert _commit_leftovers(path) == []
+
+
+def test_failed_swap_rename_restores_table(spark, tmp_path, monkeypatch):
+    """If renaming the stage into place fails, the table the swap moved
+    aside is renamed back: a model table and an IVF index both stay
+    readable and unchanged (they used to delete the live table before
+    the rename)."""
+    import os
+
+    from end_to_end_data_engineering_pipeline_spark.operators.similarity import (
+        ivf_load_index,
+        ivf_save_index,
+    )
+    from end_to_end_data_engineering_pipeline_spark.plans import ModelRunner
+
+    runner = ModelRunner(warehouse_dir=str(tmp_path / "wh"))
+    version = [0]
+
+    @runner.model("agg", materialization="table")
+    def agg(spark):
+        return spark.createDataFrame([(version[0],)], "v long")
+
+    model_path = str(tmp_path / "wh" / "agg")
+    ivf_path = str(tmp_path / "ivf")
+    runner.run(spark)
+    ivf_save_index(spark, [[1, 2]], ivf_path)
+
+    real_rename = os.rename
+    failed = []
+
+    def rename(src, dst):
+        # fail the first rename into each table, once
+        if dst in (model_path, ivf_path) and dst not in failed:
+            failed.append(dst)
+            raise OSError("injected rename failure")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    version[0] = 1
+    with pytest.raises(OSError, match="injected rename failure"):
+        runner.run(spark)
+    with pytest.raises(OSError, match="injected rename failure"):
+        ivf_save_index(spark, [[3, 4]], ivf_path)
+    monkeypatch.undo()
+
+    assert failed == [model_path, ivf_path]
+    assert _table_rows(spark, model_path) == [(0,)]
+    assert ivf_load_index(spark, ivf_path) == [[1, 2]]
+    assert _commit_leftovers(model_path) == []
+    assert _commit_leftovers(ivf_path) == []
 
 
 def test_apply_changes_cdc_semantics(spark, tmp_path):

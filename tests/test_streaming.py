@@ -1634,6 +1634,139 @@ def test_streaming_postings_index_equals_rebuild(spark, tmp_path):
     assert want_df.exceptAll(dfreq).count() == 0
 
 
+def test_postings_sink_reapplies_epoch_after_failed_commit(
+    spark, tmp_path, monkeypatch
+):
+    """An increment whose dfreq commit fails must not record its epoch
+    in meta (meta commits last), so the re-delivered epoch is applied,
+    once: the index then equals a batch rebuild, postings included."""
+    from end_to_end_data_engineering_pipeline_spark.operators import snapshots
+    from end_to_end_data_engineering_pipeline_spark.operators.snapshots import (
+        list_versions,
+        snapshot_read,
+    )
+    from end_to_end_data_engineering_pipeline_spark.operators.text import (
+        tokenize_tf,
+    )
+    from end_to_end_data_engineering_pipeline_spark.streaming.windows import (
+        streaming_postings_index_sink,
+    )
+
+    src = str(tmp_path / "docs_src")
+    store = str(tmp_path / "idx")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "doc_id long, text string"
+    batches = [
+        [(1, "fast scan table"), (2, "merge window merge")],
+        [(3, "fast fast stream"), (4, "scan scan batch")],
+    ]
+
+    def deliver():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = streaming_postings_index_sink(stream, spark, store, ckpt).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def add(batch):
+        spark.createDataFrame(batch, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    add(batches[0])
+    deliver()  # bootstrap epoch
+    meta_versions = list_versions(store + "/meta")
+
+    def failing_merge(*args, **kwargs):
+        raise RuntimeError("injected dfreq commit failure")
+
+    add(batches[1])
+    monkeypatch.setattr(snapshots, "snapshot_merge", failing_merge)
+    with pytest.raises(Exception, match="injected dfreq commit failure"):
+        deliver()
+    assert list_versions(store + "/meta") == meta_versions
+
+    monkeypatch.undo()
+    deliver()  # the failed epoch is re-delivered from the checkpoint
+    rebuilt = tokenize_tf(
+        spark.createDataFrame([r for b in batches for r in b], schema)
+    )
+    got = snapshot_read(spark, store + "/postings")
+    assert got.exceptAll(rebuilt).count() == 0
+    assert rebuilt.exceptAll(got).count() == 0
+    want_df = rebuilt.groupBy("w").agg(
+        F.count(F.lit(1)).cast("long").alias("df")
+    )
+    dfreq = snapshot_read(spark, store + "/dfreq")
+    assert dfreq.exceptAll(want_df).count() == 0
+    assert want_df.exceptAll(dfreq).count() == 0
+    assert snapshot_read(spark, store + "/meta").collect()[0].n_docs == 4
+
+
+def test_postings_sink_reruns_failed_bootstrap(spark, tmp_path, monkeypatch):
+    """A bootstrap epoch whose dfreq write fails after postings landed
+    runs again on re-delivery, over what it left: the index then
+    equals a batch rebuild of the first batch."""
+    from end_to_end_data_engineering_pipeline_spark.operators import snapshots
+    from end_to_end_data_engineering_pipeline_spark.operators.snapshots import (
+        list_versions,
+        snapshot_read,
+    )
+    from end_to_end_data_engineering_pipeline_spark.operators.text import (
+        tokenize_tf,
+    )
+    from end_to_end_data_engineering_pipeline_spark.streaming.windows import (
+        streaming_postings_index_sink,
+    )
+
+    src = str(tmp_path / "docs_src")
+    store = str(tmp_path / "idx")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "doc_id long, text string"
+    batch = [(1, "fast scan table"), (2, "merge window merge")]
+    spark.createDataFrame(batch, schema).coalesce(1).write.parquet(src)
+
+    def deliver():
+        stream = spark.readStream.schema(schema).parquet(src)
+        q = streaming_postings_index_sink(stream, spark, store, ckpt).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    real_write = snapshots.snapshot_write
+
+    def failing_dfreq(spark_, path, *args, **kwargs):
+        if path.endswith("/dfreq"):
+            raise RuntimeError("injected dfreq write failure")
+        return real_write(spark_, path, *args, **kwargs)
+
+    monkeypatch.setattr(snapshots, "snapshot_write", failing_dfreq)
+    with pytest.raises(Exception, match="injected dfreq write failure"):
+        deliver()
+    assert list_versions(store + "/postings")
+    assert not list_versions(store + "/meta")
+
+    monkeypatch.undo()
+    deliver()  # the failed bootstrap epoch is re-delivered
+    rebuilt = tokenize_tf(spark.createDataFrame(batch, schema))
+    got = snapshot_read(spark, store + "/postings")
+    assert got.exceptAll(rebuilt).count() == 0
+    assert rebuilt.exceptAll(got).count() == 0
+    want_df = rebuilt.groupBy("w").agg(
+        F.count(F.lit(1)).cast("long").alias("df")
+    )
+    dfreq = snapshot_read(spark, store + "/dfreq")
+    assert dfreq.exceptAll(want_df).count() == 0
+    assert want_df.exceptAll(dfreq).count() == 0
+    assert snapshot_read(spark, store + "/meta").collect()[0].n_docs == 2
+
+
 def test_streaming_cdc_eq_sink_applies_and_replays_idempotently(
     spark, tmp_path
 ):

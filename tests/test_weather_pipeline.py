@@ -506,6 +506,45 @@ def test_local_frame_matches_list_path(spark, utc_process):
             spark.createDataFrame(bad, schema)
 
 
+@pytest.mark.parametrize("zone", ["UTC", "America/New_York"])
+def test_pin_result_round_trips_types(spark, monkeypatch, zone):
+    """pin_result hands back the schema and the rows it pinned, for
+    struct, array, map, decimal, microsecond-timestamp, date and null
+    columns and duplicate column names, whatever the driver process's
+    time zone (``collect()`` renders TIMESTAMP in it)."""
+    from end_to_end_data_engineering_pipeline_spark.catalog import pin_result
+
+    monkeypatch.setenv("TZ", zone)
+    time.tzset()
+    try:
+        flat = spark.sql(
+            """
+            SELECT * FROM VALUES
+              (1, CAST('12345.6789' AS DECIMAL(18, 4)),
+               TIMESTAMP'2021-03-14 07:30:00.000001', DATE'2020-02-29',
+               CAST(NULL AS STRING), 10L),
+              (2, NULL, NULL, NULL, 'y', 20L)
+            AS t(id, dec, ts, d, n, id)
+            """
+        )
+        nested = spark.sql(
+            """
+            SELECT * FROM VALUES
+              (1, named_struct('a', 1L, 'b', 'x'), array(1, NULL, 3),
+               map('k', TIMESTAMP'2026-08-01 13:05:07.123456')),
+              (2, NULL, NULL, NULL)
+            AS t(id, s, arr, m)
+            """
+        )
+        for df in (flat, nested):
+            pinned = pin_result(df)
+            assert pinned.schema == df.schema
+            assert pinned.collect() == df.collect()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
 def _stage_task_counts(spark, group: str) -> list[int]:
     st = spark.sparkContext.statusTracker()
     counts = []
